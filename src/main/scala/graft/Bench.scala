@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}. The driver runs
   * this per-round at sf0.1 on local[32] → BENCH_r{N}.json.
@@ -22,19 +24,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   private val RecycleEvery = 48
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "localhost")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def buildSession(): SparkSession = {
+    val spark = GraftSession.local(appName = "graft-bench")
     // The two-level prefix-sum in Packing runs one deliberate window
     // over the O(#partitions) totals frame; Spark warns "No Partition
     // Defined" on every run, and dozens of benign copies bury real
@@ -68,15 +59,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var spark = buildSession(cpus)
+    var spark = buildSession()
     warmup(spark, sfDir)
-    // SPARK_GRAFT_ONLY=q65_nearest_dense_grid,q71_… runs a subset (an
-    // iteration aid; the driver leaves it unset and benches everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    // SPARK_GRAFT_ONLY runs a subset of the queries
+    val selected = SparkEntry.selected()
     // (seconds or -1 on failure, residual blocks, residual bytes):
     // the residuals are sampled AFTER the per-rep cleanup, so a
     // nonzero value is state this rep leaked into the next one — the
@@ -143,7 +129,7 @@ object Bench {
         SparkSession.clearActiveSession()
         SparkSession.clearDefaultSession()
         System.gc()
-        spark = buildSession(cpus)
+        spark = buildSession()
         warmup(spark, sfDir)
       }
       val a = runOnce(fn)

@@ -20,6 +20,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     R.q11JoinStar(spark, "/root/testdata/sf0.001")
 
+  /** The declared queries a run selects, in name order:
+    * `SPARK_GRAFT_ONLY=q65_nearest_dense_grid,q71_…` runs a subset (an
+    * iteration aid); unset or empty selects every query.
+    */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val names = only.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => names.isEmpty || names(n) }
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // aggregations (A1/A2/A6/A7 + exact distinct)
     "q01_pricing_summary" -> (R.q1PricingSummary _),

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * any engine replays the fixed point bit-exactly. Magnitude
   * discipline: values grow ≤ ×(opposing side mass) per half-step, so
   * every unnormalized stretch is capped at 2 rounds (the envelope
-  * ProbeScaleEval measures on dense complete-bipartite graphs at 8
-  * rounds) — and because the only null source in the rescale is a
+  * HitsSpec pins on the dense complete-bipartite K_{2000,500} at 8
+  * rounds; BASELINE.md "Scale probe, round-10" records the overflow
+  * it guards) — and because the only null source in the rescale is a
   * 38-digit overflow (inputs are non-null by construction), the
   * normalize step RAISES on a null product instead of letting the
   * closing left-join coalesce read it as a legitimate 0.
@@ -195,9 +196,9 @@ object Hits {
       // Exact renormalization of h every SECOND round bounds the
       // decimal magnitude: unnormalized growth is ×(side mass) per
       // half-step and K_{2000,500}-dense graphs overflow 38 digits
-      // by round 4 (found by ProbeScaleEval — the closing rescale's
-      // v·scale product went null). A 2-round stretch is the
-      // envelope the probe validates through 8 rounds. (The r10
+      // by round 4 (BASELINE.md "Scale probe, round-10": the closing
+      // rescale's v·scale product went null). A 2-round stretch is
+      // the envelope HitsSpec validates through 8 rounds. (The r10
       // single-mid-point placement let 6-8-iteration runs regrow a
       // 4-round stretch — exactly the undetected-overflow window
       // ADVICE r10 flagged.)

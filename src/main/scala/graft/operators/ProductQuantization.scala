@@ -90,10 +90,10 @@ object ProductQuantization {
     * md5-sampled query set → (q_id, rank, vec_id, adc_dist,
     * exact_dist). `dims` must equal m·subDim.
     *
-    * Query-set regime (ProbeScaleEval §5 measures this): the ADC
-    * join expands every corpus code row by the broadcast distance
-    * tables, so work is Θ(N·m·|Q|) and wall grows LINEARLY in |Q| —
-    * no cliff, but also no sublinearity. This flat scan is the right
+    * Query-set regime (BASELINE.md "r11 PQ/ADC query-regime probe"
+    * measures it): the ADC join expands every corpus code row by the
+    * broadcast distance tables, so work is Θ(N·m·|Q|) and wall grows
+    * LINEARLY in |Q| — no cliff, but also no sublinearity. This flat scan is the right
     * shape for BOUNDED query sets (evaluation probes, dedup seeds,
     * contamination checks: |Q| up to a few thousand); past that, two
     * walls arrive together: the |Q|·m·k broadcast table stops being

@@ -34,10 +34,10 @@ import graft.functions.VectorFunctions
   *     members by the same portable md5 rank. Skewed corpora (a hot
   *     semantic region captured by one centroid) therefore cap every
   *     final cell near the target instead of letting one cell go
-  *     quadratic. ProbeScaleEval plants exactly this skew at 10-40×
-  *     the bench embedding volume and asserts Σ|cell|² stays within
-  *     the linear bound while planted exact duplicates are all
-  *     caught.
+  *     quadratic. BASELINE.md ("r11 re-probe after the HITS relayout
+  *     + SemDeDup two-level split") records this skew planted at
+  *     10-40× the bench embedding volume, with Σ|cell|² within the
+  *     linear bound and every planted exact duplicate caught.
   *
   * The quantizer stays the PORTABLE md5-rank draw
   * ([[Similarity.ivfTopKPortable]]'s recipe): centroids are the

@@ -12,7 +12,7 @@ import graft.functions.expressions.TextExpressions._
   * as the Column API:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * val spark = GraftSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   * spark.sql("SELECT graft_cosine_sim(a.embedding, b.embedding) ...")
   * }}}
   *

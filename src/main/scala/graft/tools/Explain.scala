@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.core.GraftSession
 
 /** Plan inspector: prints the formatted physical plan of one or all
   * declared queries — the iterate-on-the-plan loop the builder prompt
@@ -14,23 +13,13 @@ import graft.SparkEntry
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val only = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(appName = "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_ == n) }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"explain failed: $e") }
-      }
+    SparkEntry.selected(args.lift(1)).foreach { case (name, fn) =>
+      println(s"\n========== $name ==========")
+      try fn(spark, sfDir).explain("formatted")
+      catch { case e: Throwable => println(s"explain failed: $e") }
+    }
     spark.stop()
   }
 }

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 /** Builds a k× scaled copy of a testdata dir for the cross-cutting
   * scale leg (r12 verdict #3: one real-data 10× board catches the
@@ -30,15 +32,7 @@ object MakeScale {
     val Array(src, out, kStr) = args
     val k = kStr.toInt
     require(k >= 1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(appName = "graft-make-scale")
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

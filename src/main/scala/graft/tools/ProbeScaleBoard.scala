@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** FULL-BOARD real-data scale sweep (r13 verdict #6: turn the 24-query
   * sf0.1 → sf1 spot-board into a board-wide measured exponent): every
   * declared query runs back-to-back on two parquet dirs (base, scaled)
@@ -27,20 +29,10 @@ object ProbeScaleBoard {
     val scaledDir = args(1)
     val timeoutSec = if (args.length > 2) args(2).toInt else 240
     val ratioThreshold = if (args.length > 3) args(3).toDouble else 4.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val recycleEvery = 48
 
     def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName("graft-scale-board")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.host", "localhost")
-        .getOrCreate()
+      val s = GraftSession.local(appName = "graft-scale-board")
       s.sparkContext.setLogLevel("ERROR")
       s
     }
@@ -86,11 +78,7 @@ object ProbeScaleBoard {
       if (good.nonEmpty) good.min else -1.0
     }
 
-    val selectedAll = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected =
-      selectedAll.filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = graft.SparkEntry.selected()
     println(s"[scale-board] ${selected.size} queries, base=$baseDir " +
       s"scaled=$scaledDir timeout=${timeoutSec}s " +
       s"adjudicate>${ratioThreshold}x")

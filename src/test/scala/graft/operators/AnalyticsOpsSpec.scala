@@ -216,6 +216,29 @@ class KCoreSpec extends AnyFunSuite {
   private def undirected(pairs: (Long, Long)*) =
     pairs.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
 
+  test("random graph, shuffle-hash regime: the fixed point is the " +
+      "plain-Scala 4-core and every survivor keeps induced degree >= 4") {
+    // mean degree ~5.6, just above the 4-core emergence threshold: the
+    // peel cascades and leaves a non-trivial core
+    val rnd = new scala.util.Random(11L)
+    val pairs = Seq.fill(840)((rnd.nextInt(300).toLong,
+        rnd.nextInt(300).toLong))
+      .filter { case (a, b) => a != b }
+    val got = KCore.coreMembers(undirected(pairs: _*), k = 4, rounds = 40,
+        broadcastThreshold = 1L)
+      .as[(Long, Long)].collect().toMap
+    val adj = pairs.flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+      .groupBy(_._1).map { case (n, es) => n -> es.map(_._2).toSet }
+    def peel(alive: Set[Long]): Set[Long] = {
+      val next = alive.filter(n => (adj(n) & alive).size >= 4)
+      if (next == alive) alive else peel(next)
+    }
+    val core = peel(adj.keySet)
+    assert(core.nonEmpty && core.size < adj.size)
+    assert(got == core.map(n => n -> (adj(n) & core).size.toLong).toMap)
+    assert(got.values.forall(_ >= 4L))
+  }
+
   test("triangle survives k=2, pendant peeled") {
     val edges = undirected((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
     val got = KCore.coreMembers(edges, k = 2, rounds = 8)
@@ -297,6 +320,37 @@ class ShortestPathsSpec extends AnyFunSuite {
     assert(run(1) == Map(1L -> 0L, 2L -> 10L, 3L -> 1L))
     // ≤2 edges: 2 improves via 1→3→2; 4 only via the expensive 1→2→4
     assert(run(2) == Map(1L -> 0L, 2L -> 2L, 3L -> 1L, 4L -> 11L))
+  }
+
+  test("random graph, shuffle-hash regime: Bellman-Ford and BFS reach " +
+      "the same nodes, dist <= cost <= 9·dist, both match a plain-Scala " +
+      "reference") {
+    val rnd = new scala.util.Random(7L)
+    val wEdges = Seq.fill(900)((rnd.nextInt(300).toLong,
+        rnd.nextInt(300).toLong))
+      .filter { case (a, b) => a != b }.distinct
+      .map { case (a, b) => (a, b, 1L + (a * 31 + b * 17) % 9) }
+    val seedIds = Seq(0L, 1L, 2L)
+    val rounds = 4
+    val dist = Bfs.hopDistance(wEdges.map(e => (e._1, e._2)).toDF("src", "dst"),
+        seedIds.toDF("node"), maxHops = rounds, broadcastThreshold = 1L)
+      .as[(Long, Long)].collect().toMap
+    val cost = ShortestPaths.bounded(wEdges.toDF("src", "dst", "w"),
+        seedIds.toDF("node"), rounds, broadcastThreshold = 1L)
+      .as[(Long, Long)].collect().toMap
+    // reference: Jacobi rounds over paths of <= `rounds` edges
+    def relax(weight: ((Long, Long, Long)) => Long): Map[Long, Long] =
+      (1 to rounds).foldLeft(seedIds.map(_ -> 0L).toMap) { (cur, _) =>
+        wEdges.filter(e => cur.contains(e._1))
+          .foldLeft(cur) { (next, e) =>
+            val c = cur(e._1) + weight(e)
+            if (next.get(e._2).forall(c < _)) next.updated(e._2, c) else next
+          }
+      }
+    assert(dist == relax(_ => 1L))
+    assert(cost == relax(_._3))
+    assert(dist.keySet == cost.keySet && dist.size > seedIds.size)
+    assert(dist.forall { case (n, d) => d <= cost(n) && cost(n) <= 9 * d })
   }
 }
 

@@ -168,6 +168,30 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("containment prefix filter: a universal (df = n) element plus " +
+      "planted contained sets, lossless vs brute force") {
+    // every set carries "stop" on top of a selective tail; docs
+    // 41-50 hold a strict subset of doc 1's tail, so they are
+    // contained in doc 1 (and in each other)
+    val rnd = new scala.util.Random(9L)
+    val tails = (1L to 40L).map(id => id -> Seq.fill(12)("g" + rnd.nextInt(400)).distinct)
+    val planted = (41L to 50L).map(id => id -> tails.head._2.take(8))
+    val rows = (tails ++ planted).map { case (id, t) => (id, t :+ "stop") }
+    val d = rows.toDF("doc_id", "toks")
+    for (t <- Seq(0.5, 0.9)) {
+      val got = Dedup.containmentPairsIndexed(d, "doc_id", "toks", t)
+        .as[(Long, Long, Double)].collect().toSet
+      val expect = (for {
+        (ia, sa) <- rows; (ib, sb) <- rows if ia != ib
+        c = sa.toSet.intersect(sb.toSet).size
+        cont = math.rint(c.toDouble / sa.size * 1e6) / 1e6
+        if cont >= t
+      } yield (ia, ib, cont)).toSet
+      assert(got == expect, s"t=$t: ${got.diff(expect)} / ${expect.diff(got)}")
+      assert(expect.contains((41L, 1L, 1.0)))
+    }
+  }
+
   test("embedding near-dup via sign-LSH with multi-probe") {
     val rnd = new scala.util.Random(7)
     val v1 = Array.fill(16)(rnd.nextGaussian().toFloat)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -64,5 +65,28 @@ class HitsSpec extends AnyFunSuite {
     val dup = Hits.microHits(edges, 3).collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(once === dup)
+  }
+
+  test("complete bipartite K_{2000,500} at 4 and 8 rounds: every hub " +
+      "and authority exact, inside the 38-digit envelope") {
+    // regularity forces hub = (N·10⁶) div S and auth = (N·10⁶) div P
+    // after any round count. Growth is ×|E| = ×10⁶ per round, so a
+    // 4-round unnormalized stretch overflows DECIMAL(38,0) here (the
+    // normalize step raises); the 2-round stretch must hold through 8
+    val (s0, p0) = (2000L, 500L)
+    val edges = spark.range(s0 * p0).select(
+      (col("id") / p0).cast("long").as("src"),
+      (lit(s0) + pmod(col("id"), lit(p0))).as("dst"))
+    val hub = (s0 + p0) * 1000000L / s0
+    val auth = (s0 + p0) * 1000000L / p0
+    for (rounds <- Seq(4, 8)) {
+      val out = Hits.microHits(edges, rounds).collect()
+      assert(out.length == s0 + p0)
+      assert(out.forall { r =>
+        val (node, h, a) = (r.getLong(0), r.getLong(1), r.getLong(2))
+        if (node < s0) h == hub && a == 0L else h == 0L && a == auth
+      }, s"$rounds rounds: regular-graph invariant broken " +
+        s"(want hub=$hub auth=$auth)")
+    }
   }
 }

@@ -77,4 +77,41 @@ class IncrementalDedupKmvSpec extends AnyFunSuite {
     assert(math.abs(unionEst / 4000.0 - 1.0) < 0.375, s"union: $out")
     assert(interEst > 500.0 && interEst < 3500.0, s"intersect: $out")
   }
+
+  test("incremental near-dup: exactly the planted batch-vs-base pairs " +
+      "surface from a 200-doc base and a 40-doc batch") {
+    // doc text is a 40-token stream drawn from its seed; batch docs
+    // 1000-1009 replay base docs 0-9, the other 30 are novel
+    def text(seed: Long): String = {
+      val rnd = new scala.util.Random(seed)
+      Seq.fill(40)("w" + rnd.nextInt(1000000)).mkString(" ")
+    }
+    val base = (0L until 200L).map(id => (id, text(id))).toDF("doc_id", "text")
+    val batch = (1000L until 1040L)
+      .map(id => (id, text(if (id < 1010L) id - 1000L else id)))
+      .toDF("doc_id", "text")
+    val out = PortableMinHash.incrementalNearDupPairs(
+        base, batch, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(3)))
+      .toSet
+    assert(out == (0L until 10L).map(i => (i, 1000L + i, "batch_vs_base")).toSet)
+  }
+
+  test("kmv timeline above k: one row per first-seen day, exact final " +
+      "count, non-decreasing estimate, final day inside 3/sqrt(k)") {
+    def ts(day: Long) = new java.sql.Timestamp(day * 86400000L + 1000L)
+    val rnd = new scala.util.Random(23L)
+    // 30 days × 100 events over a 1500-value space: later days add
+    // ever fewer first-seen values
+    val rows = (0L until 30L).flatMap(d =>
+      Seq.fill(100)((rnd.nextInt(1500).toLong, ts(d))))
+    val firstSeen = rows.groupBy(_._1).map(_._2.map(_._2.getTime).min)
+    val out = Kmv.distinctTimeline(rows.toDF("user_id", "ts"),
+        "user_id", "ts", k = 64)
+      .collect().sortBy(_.getLong(0))
+    assert(out.length == firstSeen.toSet.size)
+    assert(out.last.getLong(1) == rows.map(_._1).distinct.size.toLong)
+    assert(out.last.getBoolean(3), s"final estimate outside 3/sqrt(k): ${out.last}")
+    assert(out.sliding(2).forall(w => w(0).getDouble(2) <= w(1).getDouble(2)))
+  }
 }

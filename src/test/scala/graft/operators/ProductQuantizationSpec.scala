@@ -42,6 +42,80 @@ class ProductQuantizationSpec extends AnyFunSuite {
     }
   }
 
+  test("planted twins: with zero encoding error every query's rank-1 " +
+      "sits at ADC distance 0 — flat, IVF-pruned and residual IVFADC") {
+    // 8 distinct vectors, each with an exact twin (id 2j and 2j+1); a
+    // 16-code book holds every corpus (and residual) subvector, so the
+    // twin reconstructs the query exactly, and it shares the query's
+    // coarse cell, so pruning (nprobe < nlist) cannot lose it
+    val vecs = (0 until 16).map { i =>
+      val j = i / 2
+      (i.toLong, Seq(j.toFloat, j + 0.5f, 2f * j, -j.toFloat))
+    }
+    val lattice = ProductQuantization.latticeFrame(
+      vecs.toDF("vec_id", "embedding"), "vec_id", "embedding")
+    val nq = 6
+    def rankOne(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("rank") === 1).select("adc_dist").as[Long].collect()
+    val flat = rankOne(ProductQuantization.adcTopK(lattice, "vec_id",
+      dims = 4, m = 2, k = 16, nQueries = nq, topK = 3,
+      cbSalt = "t_cb", qSalt = "t_q"))
+    val ivf = rankOne(ProductQuantization.ivfAdcTopK(lattice, "vec_id",
+      dims = 4, m = 2, k = 16, nQueries = nq, topK = 3,
+      nlist = 4, nprobe = 2, cbSalt = "t_cb", qSalt = "t_q",
+      ivfSalt = "t_ivf"))
+    val residual = rankOne(ProductQuantization.ivfAdcResidualTopK(lattice,
+      "vec_id", dims = 4, m = 2, k = 16, nQueries = nq, topK = 3,
+      nlist = 4, nprobe = 2, cbSalt = "t_cb", qSalt = "t_q",
+      ivfSalt = "t_ivf"))
+    for ((name, d) <- Seq("flat" -> flat, "ivf" -> ivf, "residual" -> residual))
+      assert(d.length == nq && d.forall(_ == 0L), s"$name: ${d.toSeq}")
+  }
+
+  test("residual IVFADC with encoding error: every rank-1 lies in the " +
+      "exact [min probed-cell floor, own-cell floor] sandwich") {
+    // 16 random vectors, each with a twin (id 2j, 2j+1), coded by only
+    // k = 4 residual codes. A probed cell's floor is the query
+    // residual's min-code sum Σ_m min_code ‖qres_m − c‖²: no candidate
+    // scored in that cell can undercut it, and the twin (same cell,
+    // same residual) achieves the own-cell floor
+    val rnd = new scala.util.Random(5L)
+    val base = Seq.fill(16)(Seq.fill(4)(rnd.nextInt(4001) / 1000f - 2f))
+    val vecs = (0 until 32).map(i => (i.toLong, base(i / 2)))
+    val lattice = ProductQuantization.latticeFrame(
+      vecs.toDF("vec_id", "embedding"), "vec_id", "embedding")
+    val (m, subDim, k, nlist, nprobe, nq) = (2, 2, 4, 4, 2, 8)
+    val v3 = lattice.as[(Long, Seq[Long])].collect().toMap
+    def d2(a: Seq[Long], b: Seq[Long]) =
+      a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    def minus(a: Seq[Long], b: Seq[Long]) = a.zip(b).map { case (x, y) => x - y }
+    val cents = ProductQuantization.mdRanked(lattice, "vec_id", nlist, "t_ivf")
+      .select(col("rank0"), col("v3")).as[(Long, Seq[Long])].collect().toSeq
+    def byDist(v: Seq[Long]) = cents.sortBy { case (c, cv) => (d2(v, cv), c) }
+    val residuals = v3.map { case (id, v) => (id, minus(v, byDist(v).head._2)) }
+    val codebook = ProductQuantization.subspaces(
+        ProductQuantization.mdRanked(residuals.toSeq.toDF("vec_id", "v3"),
+          "vec_id", k, "t_cb").select(col("rank0").as("code"), col("v3")),
+        m, subDim, out = "c3")
+      .select("m", "c3").as[(Int, Seq[Long])].collect().groupBy(_._1)
+    def floor(qres: Seq[Long]) = (0 until m).map { j =>
+      codebook(j).map(c => d2(qres.slice(j * subDim, (j + 1) * subDim), c._2)).min
+    }.sum
+    val got = ProductQuantization.ivfAdcResidualTopK(lattice, "vec_id",
+        dims = 4, m = m, k = k, nQueries = nq, topK = 3, nlist = nlist,
+        nprobe = nprobe, cbSalt = "t_cb", qSalt = "t_q", ivfSalt = "t_ivf")
+      .filter(col("rank") === 1).select("q_id", "adc_dist")
+      .as[(Long, Long)].collect()
+    assert(got.length == nq)
+    for ((q, adc) <- got) {
+      val floors = byDist(v3(q)).take(nprobe).map(c => floor(minus(v3(q), c._2)))
+      assert(adc >= floors.min && adc <= floors.head,
+        s"query $q: rank-1 $adc outside [${floors.min}, ${floors.head}]")
+    }
+    // the k = 4 book cannot hold 16 distinct residuals: real error
+    assert(residuals.values.toSeq.distinct.exists(r => floor(r) > 0L))
+  }
+
   test("adcTopK: the |Q| regime guard fires past maxAdcQueries with " +
       "the IVF cutover in the message") {
     val vecs = (0 until 8).map(i =>

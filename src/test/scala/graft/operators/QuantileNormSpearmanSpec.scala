@@ -25,13 +25,17 @@ class QuantileNormSpearmanSpec extends AnyFunSuite {
   }
 
   test("quantile norm: ties share a percentile (strictly-below mass)") {
-    val df = Seq((1L, "g", 5.0), (2L, "g", 5.0), (3L, "g", 7.0), (4L, "g", 9.0))
+    // source "c" is a constant-score group: every member at 0
+    val df = Seq((1L, "g", 5.0), (2L, "g", 5.0), (3L, "g", 7.0), (4L, "g", 9.0),
+      (5L, "c", 0.5), (6L, "c", 0.5), (7L, "c", 0.5))
       .toDF("doc_id", "source", "score")
     val out = Quantiles.quantileNormalize(df, "doc_id", "source", "score")
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
+    assert(out.size === 7)
     assert(out(1L) === 0.0 && out(2L) === 0.0)
     assert(out(3L) === 0.5) // two of four strictly below
     assert(out(4L) === 0.75)
+    assert(out(5L) === 0.0 && out(6L) === 0.0 && out(7L) === 0.0)
   }
 
   test("spearman: monotone +1, antitone -1, permuted in between") {

@@ -91,4 +91,19 @@ class RepeatedSpansSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     assert(RepeatedSpans.repeatedSpans(df, "doc_id", "text").count() === 0L)
   }
+
+  test("a universal passage (in every doc) is one span [20, 30) per doc") {
+    // 40 docs × 100 tokens, unique per (doc, pos) except positions
+    // [20, 30): the df = n worst case the frequent-gram flag-join
+    // must handle without a pair-join
+    val n = 40L
+    val df = (0L until n).map { id =>
+      (id, (0 until 100).map(i =>
+        if (i >= 20 && i < 30) s"boiler$i" else s"u${id}_$i").mkString(" "))
+    }.toDF("doc_id", "text")
+    val spans = RepeatedSpans.repeatedSpans(df, "doc_id", "text",
+        k = 8, minDocs = 2)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+    assert(spans.sortBy(_._1).toSeq == (0L until n).map(id => (id, 20, 30)))
+  }
 }

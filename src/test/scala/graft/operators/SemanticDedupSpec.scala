@@ -110,6 +110,9 @@ class SemanticDedupSpec extends AnyFunSuite {
     val cellSizes = out.groupBy(_._2).view.mapValues(_.length)
     assert(cellSizes.values.max < 30,
       s"split left a runaway cell: ${cellSizes.toMap}")
+    // the scale bound: Σ|cell|² ≤ n·4·target, linear in n
+    assert(cellSizes.values.map(c => c.toLong * c).sum <= out.length * 4L * 8L,
+      s"quadratic cells: ${cellSizes.toMap}")
     // identical planted pairs: the higher id is ALWAYS a duplicate
     // (its twin shares every assignment decision, so they co-locate
     // at both levels and cosine is exactly 1) — dup_of is the

@@ -276,6 +276,30 @@ class TextEvalAttributionSpec extends AnyFunSuite {
     assert(rows.forall(_.getDouble(6) === 141666667.0 / 2.0e8))
   }
 
+  test("chrF: identical even pairs and char-disjoint odd pairs match " +
+      "the closed form at every order") {
+    // even: cand = ref = 5 × md5(id) (160 chars, every gram matched);
+    // odd: 'x'*150 vs 'y'*140 (no shared gram, totals only)
+    def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val n = 10L
+    val df = (0L until n).map(id =>
+      if (id % 2 == 0) (id, md5hex(id.toString) * 5, md5hex(id.toString) * 5)
+      else (id, "x" * 150, "y" * 140)).toDF("id", "cand", "ref")
+    val byN = TextEval.chrfCorpus(df, "id", "cand", "ref").collect()
+      .map(r => r.getInt(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
+    val (ev, od) = (n / 2, n / 2)
+    for (o <- 1 to 6) {
+      val m = ev * (160L - o + 1)
+      val c = m + od * (150L - o + 1)
+      val r = m + od * (140L - o + 1)
+      val (gm, gc, gr, gf) = byN(o)
+      assert((gm, gc, gr) == ((m, c, r)), s"order $o counts")
+      assert(math.abs(gf - 5.0 * m / (4.0 * r + c)) < 1e-12, s"order $o F")
+    }
+  }
+
   test("chrF: repeats clip; a dry order nulls f_n and the headline") {
     // cand "aaa" vs ref "aa": n=1 M=2,C=3,R=2 → 10/11; n=2 M=1,C=2,
     // R=1 → 5/6

@@ -30,4 +30,23 @@ class WeightedMinHashSpec extends AnyFunSuite {
     val (_, ex45, n45) = out((4L, 5L))
     assert(ex45 === 0.4 && n45 === 4L) // 2 / 5
   }
+
+  test("sibling pairs: identical multisets score exact = est = 1, " +
+      "disjoint ones exact 0") {
+    // pair (2m, 2m+1): even m share a 10-token multiset (tf 4 each),
+    // odd m share nothing
+    val docs = (0L until 40L).map { id =>
+      val m = id / 2
+      (id, (0 until 40).map(i =>
+        if (m % 2 == 0) s"tok${m}_${i % 10}" else s"u${id}_$i").mkString(" "))
+    }.toDF("doc_id", "text")
+    val pairs = (0L until 20L).map(m => (2 * m, 2 * m + 1)).toDF("id_a", "id_b")
+    val out = WeightedMinHash.pairJaccard(docs, "doc_id", "text", pairs)
+      .select("id_a", "est_jaccard", "exact_jaccard")
+      .collect().map(r => (r.getLong(0) / 2, r.getDouble(1), r.getDouble(2)))
+    assert(out.length == 20)
+    for ((m, est, exact) <- out)
+      if (m % 2 == 0) assert(est == 1.0 && exact == 1.0, s"pair $m")
+      else assert(exact == 0.0, s"pair $m")
+  }
 }

@@ -69,6 +69,27 @@ class WinnowingBitextSpec extends AnyFunSuite {
       k = 4, w = 4, minShared = 1, dfCap = 2).count() >= 1L)
   }
 
+  test("winnowing matches: a universal passage is df-capped away while " +
+      "every planted (2i, 2i+1) pair is found with >= 3 shared fps") {
+    // 40 docs × 60 tokens: positions 10-19 are in EVERY doc (df = n),
+    // positions 30-45 are shared by each (2i, 2i+1) pair only
+    val n = 40L
+    val df = (0L until n).map { id =>
+      (id, (0 until 60).map { i =>
+        if (i >= 10 && i < 20) s"boiler$i"
+        else if (i >= 30 && i < 46) s"pair${id / 2}_$i"
+        else s"u${id}_$i"
+      }.mkString(" "))
+    }.toDF("doc_id", "text")
+    val out = Winnowing.matchPairs(df, "doc_id", "text",
+        k = 4, w = 4, minShared = 3, dfCap = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(out.map(p => (p._1, p._2)).sorted.toSeq ==
+      (0L until n by 2).map(a => (a, a + 1)))
+    // coverage: 13 internal 4-grams → 10 full windows → ≥ ⌈10/w⌉ = 3
+    assert(out.forall(_._3 >= 3L), out.toSeq)
+  }
+
   test("bitext margin: hub correction demotes a globally-close candidate") {
     // query 1 ≡ e1, query 2 ≡ e2; hub is equally close to both
     // queries, spoke is very close to query 1 only: raw cosine ties

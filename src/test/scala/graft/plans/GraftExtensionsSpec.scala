@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.GraftSession
+
 class GraftExtensionsSpec extends AnyFunSuite {
 
   // Extensions apply at session construction: clear the default/active
@@ -13,12 +15,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
     graft.TestSpark.spark // ensure the shared context exists first
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
+    val s = GraftSession.builder(graft.TestSpark.Cores, "graft-extensions-test")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.driver.host", "localhost")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     // getOrCreate promoted this session to the JVM default; restore the

@@ -113,15 +113,8 @@ if [[ "$SKIP_SCALE" == 0 ]]; then
       run_sbt /tmp/close_makescale_r${ROUND}.log "runMain graft.tools.MakeScale $SF1 $SCALED 10"
     grep '\[makescale\]' /tmp/close_makescale_r${ROUND}.log | tail -3
   fi
-  # only export the subset filter when non-empty: ProbeScaleBoard
-  # treats an empty SPARK_GRAFT_ONLY as "select nothing", not "all";
-  # the ${arr[@]+...} guard keeps an EMPTY array from tripping
-  # `set -u` as an unbound variable on bash < 4.4 (r15 ADVICE #3)
-  ONLY_ENV=()
-  if [[ -n "$SCALE_ONLY" ]]; then
-    ONLY_ENV=(SPARK_GRAFT_ONLY="$SCALE_ONLY")
-  fi
-  env ${ONLY_ENV[@]+"${ONLY_ENV[@]}"} SPARK_GRAFT_CPUS=32 \
+  # an empty SCALE_ONLY selects every query
+  SPARK_GRAFT_ONLY="$SCALE_ONLY" SPARK_GRAFT_CPUS=32 \
     sbt -batch "runMain graft.tools.ProbeScaleBoard $SF1 $SCALED" \
     >/tmp/close_scale_r${ROUND}.log 2>&1 \
     || { echo "[close] FATAL: scale sweep failed; last lines:" >&2;

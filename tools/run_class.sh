@@ -17,7 +17,5 @@ done
 exec java $ADD_OPENS ${GRAFT_EXTRA_JAVA_OPTS:-} \
   "${SPARK_GRAFT_GC_OPT:--XX:+UseParallelGC}" \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:$(ls -d /opt/spark/jars/* | tr '\n' ':')" \
   "$MAIN" "$@"
